@@ -37,18 +37,23 @@ Execution model (the two WAL-decode phases, made Spark-shaped):
    (a pushdown-friendly binary substring compare) and decode the
    handful of survivors driver-side. Same sanctioned-metadata class as
    schema-evolution's column discovery.
-2. ``decode_pgoutput`` — the corpus-sized pass: Arrow-batched
-   ``mapInPandas`` over (lsn, payload) rows, each message decoded
-   independently (no cross-row state, so any partitioning works),
-   emitting the SAME envelope frame as the JSON adapters (lsn, tag,
-   new, old) — so filter_control_messages / extract_images /
-   latest_state run UNCHANGED downstream. Text-mode tuple values are
-   converted to the caller's row_schema types inside the decoder
-   (checked: a malformed value becomes NULL, never a corrupt row —
-   the engine-wide fix for the reference's unchecked cast,
-   src/mapping/customMapper.ts:22). Truncated/unknown messages become
-   tag='_corrupt' rows with null images instead of failing the batch
-   (dead-letter discipline, like multimodal quarantine).
+2. ``decode_pgoutput`` — the corpus-sized pass, in two halves:
+   a. ``_decode_kernel``, the ONE Python row-decode loop of the module
+      (every row decoder — v1, v2, 2PC, bronze — runs it): Arrow-batched
+      ``mapInPandas`` parsing each payload independently (no cross-row
+      state, so any partitioning works) into the schema-agnostic wire
+      frame (relid, tag, vals, kinds, old_vals, old_kinds) — tuple
+      values stay wire TEXT. Truncated/unknown messages become
+      tag='_corrupt' rows with null images instead of failing the batch
+      (dead-letter discipline, like multimodal quarantine).
+   b. ``_typed_envelope`` — JVM projections over that frame build the
+      SAME envelope as the JSON adapters (lsn, tag, new, old), so
+      filter_control_messages / extract_images / latest_state run
+      UNCHANGED downstream. Typing is ``_typed_image``: one
+      try_element_at + try_cast per schema field, inside codegen
+      (checked: a malformed or out-of-range value becomes NULL, never a
+      corrupt row or a failed batch — the engine-wide fix for the
+      reference's unchecked cast, src/mapping/customMapper.ts:22).
 
 ``encode_*`` builders produce byte-exact fixture messages for tests and
 the driver-gated query (real deployments get bytes from the slot); the
@@ -64,10 +69,8 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    DateType,
-    DoubleType,
-    FloatType,
-    IntegerType,
+    ArrayType,
+    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -199,6 +202,8 @@ def _read_tuple(buf: bytes, pos: int) -> tuple[list[object], int]:
         elif kind == b"t":
             (ln,) = struct.unpack_from(">i", buf, pos)
             pos += 4
+            if ln < 0 or pos + ln > len(buf):
+                raise ValueError("text value length past the end of the message")
             vals.append(buf[pos:pos + ln].decode())
             pos += ln
         else:
@@ -269,57 +274,9 @@ def discover_relations(messages: DataFrame,
     return out
 
 
-_CASTS = {
-    LongType: int,
-    IntegerType: int,
-    DoubleType: float,
-    FloatType: float,
-    StringType: str,
-}
-
-# Postgres text-format renderings this decoder understands, beyond the
-# numeric/string basics: bool 't'/'f', timestamp 'YYYY-MM-DD HH:MM:SS
-# [.ffffff]', numeric as plain decimal text, bytea hex '\x...'. All
-# checked — malformed text degrades to NULL per the engine-wide
-# checked-cast rule (vs the reference's unchecked cast,
-# src/mapping/customMapper.ts:22).
-_PG_BOOL = {"t": True, "true": True, "f": False, "false": False}
-
-
-def _convert(text: str | None, dt) -> object:
-    if text is None:
-        return None
-    try:
-        if isinstance(dt, DateType):
-            import datetime
-
-            return datetime.date.fromisoformat(text)
-        from pyspark.sql.types import (
-            BinaryType, BooleanType, DecimalType, TimestampType)
-
-        if isinstance(dt, BooleanType):
-            return _PG_BOOL.get(text.lower())
-        if isinstance(dt, TimestampType):
-            import datetime
-
-            return datetime.datetime.fromisoformat(text)
-        if isinstance(dt, DecimalType):
-            import decimal
-
-            return decimal.Decimal(text)
-        if isinstance(dt, BinaryType):
-            if text.startswith("\\x"):
-                return bytes.fromhex(text[2:])
-            return text.encode()
-        caster = _CASTS.get(type(dt))
-        return caster(text) if caster else None
-    except (ValueError, TypeError, ArithmeticError):
-        return None  # checked cast: malformed value -> NULL, never a crash
-
-
 def _parse_change(buf: bytes, image, known_relids=None) -> tuple:
-    """Parse ONE payload into (tag, new, old, unchanged) — the shared
-    per-message core of the v1 and v2 decoders. ``image(relid, vals)``
+    """Parse ONE payload into (tag, new, old, unchanged) — the
+    per-message core of _decode_kernel. ``image(relid, vals)``
     returns (row dict | None, unchanged column names). Any malformed
     message becomes ('_corrupt', None, None, None): dead-letter, never a
     failed batch."""
@@ -399,6 +356,160 @@ def _parse_change(buf: bytes, image, known_relids=None) -> tuple:
         return ("_corrupt", None, None, None)
 
 
+#: the wire frame _decode_kernel appends to the columns it carries
+_WIRE_FIELDS = [
+    StructField("relid", LongType()),
+    StructField("tag", StringType()),
+    StructField("vals", ArrayType(StringType())),
+    StructField("kinds", ArrayType(StringType())),
+    StructField("old_vals", ArrayType(StringType())),
+    StructField("old_kinds", ArrayType(StringType())),
+]
+
+
+def _split_kinds(vals: list[object] | None) -> tuple[list | None, list | None]:
+    """Wire tuple -> (text values, 't'/'n'/'u' kinds); 'n' and 'u' both
+    carry a NULL value, so only the kind tells SQL NULL from TOAST."""
+    if vals is None:
+        return None, None
+    out_v, out_k = [], []
+    for v in vals:
+        if isinstance(v, _UnchangedToast):
+            out_v.append(None)
+            out_k.append("u")
+        elif v is None:
+            out_v.append(None)
+            out_k.append("n")
+        else:
+            out_v.append(v)
+            out_k.append("t")
+    return out_v, out_k
+
+
+def _decode_kernel(frame: DataFrame, relations: dict[int, list[str]],
+                   payload_col: str) -> DataFrame:
+    """The module's one Python row-decode loop. Every column of ``frame``
+    except ``payload_col`` rides through unchanged; each payload adds
+    (relid, tag, vals, kinds, old_vals, old_kinds) — values as wire
+    text in wire order, NULL images for unknown relids, '_corrupt' for
+    anything malformed. Typing happens JVM-side (``_typed_envelope``)."""
+    carried = [f for f in frame.schema.fields if f.name != payload_col]
+    out_schema = StructType(carried + _WIRE_FIELDS)
+    known = frozenset(relations)
+
+    def raw_image(rid, vals):
+        return (vals if rid in known else None), []
+
+    def decode(batches) -> Iterator:
+        import pandas as pd
+
+        names = [f.name for f in carried]
+        wire = [f.name for f in _WIRE_FIELDS]
+        for pdf in batches:
+            rows: list[tuple] = []
+            for payload in pdf[payload_col]:
+                buf = b"" if payload is None else bytes(payload)
+                relid = None
+                if buf[:1] in (b"I", b"U", b"D") and len(buf) >= 5:
+                    (relid,) = struct.unpack_from(">i", buf, 1)
+                tag, new, old, _ = _parse_change(buf, raw_image, known)
+                rows.append((relid, tag, *_split_kinds(new), *_split_kinds(old)))
+            yield pd.concat(
+                [pdf[names].reset_index(drop=True),
+                 pd.DataFrame(rows, columns=wire)], axis=1)
+
+    return frame.mapInPandas(decode, schema=out_schema)
+
+
+def _wire_frame(messages: DataFrame, relations: dict[int, list[str]] | None,
+                lsn_col: str, payload_col: str,
+                ) -> tuple[DataFrame, dict[int, list[str]]]:
+    """(lsn long + the kernel's wire frame, relations) for a plain v1
+    capture, discovering ``relations`` when the caller passes none."""
+    if relations is None:
+        relations = discover_relations(messages, payload_col, lsn_col)
+    frame = messages.select(F.col(lsn_col).cast("long").alias("lsn"),
+                            F.col(payload_col))
+    return _decode_kernel(frame, relations, payload_col), relations
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _text_as(text: str, dt) -> str:
+    """Checked text -> ``dt`` cast, as SQL over the text expression
+    ``text``. bytea's text form is '\\x' + hex (odd-length or non-hex
+    digits read NULL); everything else is try_cast, the engine-wide
+    rule."""
+    if isinstance(dt, BinaryType):
+        return (f"CASE WHEN startswith({text}, '\\\\x') THEN"
+                f" IF(length({text}) % 2 = 0,"
+                f" try_to_binary(substr({text}, 3), 'hex'), NULL)"
+                f" ELSE CAST({text} AS BINARY) END")
+    return f"try_cast({text} AS {dt.simpleString()})"
+
+
+def _typed_image(vals: str, kinds: str, relid: str,
+                 relations: dict[int, list[str]],
+                 row_schema: StructType) -> tuple[F.Column, F.Column]:
+    """The one typing rule of every pgoutput decoder: (typed image,
+    unchanged-TOAST names) for the wire tuple in columns ``vals`` /
+    ``kinds``. Each schema field reads
+    ``try_element_at(vals, CASE relid WHEN r THEN i ... END)`` — NULL
+    when the row's relation lacks the column (additive evolution) — then
+    ``_text_as``. Both are NULL where ``kinds`` is (unknown relid, no
+    tuple on the wire). The kernel leaves ``vals`` NULL for relids
+    outside ``relations`` (route_table filters to its one relid), so a
+    field every relation places at the same position needs no CASE.
+    Built as SQL text: one parse instead of hundreds of py4j calls per
+    image."""
+    fields, unchanged = [], []
+    for f in row_schema.fields:
+        pos = {r: names.index(f.name) + 1  # element_at is 1-based
+               for r, names in relations.items() if f.name in names}
+        if not pos:
+            fields += [_sql_str(f.name),
+                       f"CAST(NULL AS {f.dataType.simpleString()})"]
+            continue
+        if len(pos) == len(relations) and len(set(pos.values())) == 1:
+            at = str(next(iter(pos.values())))
+        else:
+            at = (f"CASE {relid} "
+                  + " ".join(f"WHEN {r} THEN {i}" for r, i in pos.items())
+                  + " END")
+        fields += [_sql_str(f.name),
+                   _text_as(f"try_element_at({vals}, {at})", f.dataType)]
+        unchanged.append(f"IF(try_element_at({kinds}, {at}) = 'u',"
+                         f" {_sql_str(f.name)}, NULL)")
+    names = (f"filter(array({', '.join(unchanged)}), n -> n IS NOT NULL)"
+             if unchanged else "CAST(array() AS ARRAY<STRING>)")
+    has = f"{kinds} IS NOT NULL"
+    return (F.expr(f"IF({has}, named_struct({', '.join(fields)}), NULL)"),
+            F.expr(f"IF({has}, {names}, NULL)"))
+
+
+def _typed_envelope(wire: DataFrame, relations: dict[int, list[str]],
+                    row_schema: StructType, track_unchanged: bool,
+                    *lead) -> DataFrame:
+    """``lead`` columns + (new, old [, unchanged]) typed from the
+    kernel's wire frame — the JVM half shared by every row decoder."""
+    new, unchanged = _typed_image("vals", "kinds", "relid", relations,
+                                  row_schema)
+    old, _ = _typed_image("old_vals", "old_kinds", "relid", relations,
+                          row_schema)
+    cols = [*lead, new.alias("new"), old.alias("old")]
+    if track_unchanged:
+        cols.append(unchanged.alias("unchanged"))
+    return wire.select(*cols)
+
+
+def _hex_lsn() -> F.Column:
+    # zero-padded so STRING order == WAL order (the envelope convention
+    # cdc_evolving_state also relies on)
+    return F.format_string("0/%016X", F.col("lsn")).alias("lsn")
+
+
 def decode_pgoutput(
     messages: DataFrame,
     row_schema: StructType,
@@ -423,60 +534,9 @@ def decode_pgoutput(
     carry the stored value forward instead. Off by default: the extra
     column changes the envelope schema, and non-TOAST pipelines keep
     the historical frame."""
-    if relations is None:
-        relations = discover_relations(messages, payload_col, lsn_col)
-    fields = [(f.name, f.dataType) for f in row_schema.fields]
-    out_fields = [
-        StructField("lsn", StringType()),
-        StructField("tag", StringType()),
-        StructField("new", row_schema),
-        StructField("old", row_schema),
-    ]
-    if track_unchanged:
-        from pyspark.sql.types import ArrayType
-
-        out_fields.append(StructField("unchanged", ArrayType(StringType())))
-    out_schema = StructType(out_fields)
-
-    def _image(relid: int, vals: list[object]) -> tuple[dict | None, list[str]]:
-        names = relations.get(relid)
-        if names is None:
-            return None, []
-        wire = dict(zip(names, vals))
-        img, unchanged = {}, []
-        for n, dt in fields:
-            v = wire.get(n)
-            if isinstance(v, _UnchangedToast):
-                img[n] = None
-                unchanged.append(n)
-            else:
-                img[n] = _convert(v, dt)
-        return img, unchanged
-
-    known = frozenset(relations)
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        cols = ["lsn", "tag", "new", "old"]
-        if track_unchanged:
-            cols = cols + ["unchanged"]
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload in zip(pdf[lsn_col], pdf[payload_col]):
-                # zero-padded so STRING order == WAL order (the envelope
-                # convention cdc_evolving_state also relies on)
-                lsn_s = f"0/{int(lsn):016X}"
-                tag, new, old, unch = _parse_change(
-                    bytes(payload), _image, known)
-                row = (lsn_s, tag, new, old)
-                if track_unchanged:
-                    row = row + (unch,)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return messages.mapInPandas(decode, schema=out_schema)
+    wire, relations = _wire_frame(messages, relations, lsn_col, payload_col)
+    return _typed_envelope(wire, relations, row_schema, track_unchanged,
+                           _hex_lsn(), "tag")
 
 
 # --- protocol v2: streamed in-progress transactions ---------------------------
@@ -504,8 +564,10 @@ def decode_pgoutput(
 #      join: the engine's own binned_range_join (equi-join on lsn bins,
 #      never a nested loop), left-outer so non-streamed traffic passes
 #      through.
-#   3. decode            — the same stateless Arrow pass as v1, stripping
-#      the 4 xid bytes when (and only when) the row is inside a segment.
+#   3. decode            — the same decode kernel as v1 between two JVM
+#      projections: before it, the 4 xid bytes are stripped when (and
+#      only when) the row is inside a segment; after it, S/E/c/A rows get
+#      their control tags and images are typed by the shared rule.
 #   4. stream_verdicts + apply_stream_transactions — 'c'/'A' rows are
 #      O(#transactions); a broadcast join stamps each streamed row with
 #      its commit lsn (the APPLY position) or drops it (abort/in-flight).
@@ -631,7 +693,8 @@ def decode_pgoutput_v2(
     values. Stream membership comes from the
     binned interval join against ``stream_segments`` (equi-join on lsn
     bins — operators/rangejoin.py — never a nested loop); inside a
-    segment the Int32 xid is stripped before the shared v1 parse.
+    segment the Int32 xid is stripped JVM-side before the shared
+    decode kernel.
     Auto-discovery of ``relations`` handles streamed 'R' messages too:
     an 'R' whose lsn falls inside a segment has its 4 xid bytes
     stripped before the driver-side decode (segments are collected
@@ -686,91 +749,41 @@ def decode_pgoutput_v2(
         "__lsn", "seg_start", "seg_stop", bin_width, how="left_outer",
     ).select("__lsn", "__payload", F.col("seg_xid").alias("__seg_xid"))
 
-    fields = [(f.name, f.dataType) for f in row_schema.fields]
-    out_fields = [
-        StructField("lsn", LongType()),
-        StructField("xid", LongType()),
-        StructField("top_xid", LongType()),
-        StructField("tag", StringType()),
-        StructField("new", row_schema),
-        StructField("old", row_schema),
-    ]
-    if track_unchanged:
-        from pyspark.sql.types import ArrayType
-
-        out_fields.append(StructField("unchanged", ArrayType(StringType())))
-    out_schema = StructType(out_fields)
-
-    def _image(relid: int, vals: list[object]) -> tuple[dict | None, list[str]]:
-        names = relations.get(relid)
-        if names is None:
-            return None, []
-        wire = dict(zip(names, vals))
-        img, unchanged = {}, []
-        for n, dt in fields:
-            v = wire.get(n)
-            if isinstance(v, _UnchangedToast):
-                img[n] = None
-                unchanged.append(n)
-            else:
-                img[n] = _convert(v, dt)
-        return img, unchanged
-
-    _CTRL = {b"S": "stream_start", b"E": "stream_stop",
-             b"c": "stream_commit", b"A": "stream_abort"}
-    known = frozenset(relations)
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        cols = ["lsn", "xid", "top_xid", "tag", "new", "old"]
-        if track_unchanged:
-            cols = cols + ["unchanged"]
-
-        def emit(rows, lsn, xid, top, tag, new=None, old=None, unch=None):
-            row = (int(lsn), xid, top, tag, new, old)
-            if track_unchanged:
-                row = row + (unch,)
-            rows.append(row)
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload, seg_xid in zip(
-                pdf["__lsn"], pdf["__payload"], pdf["__seg_xid"]
-            ):
-                buf = bytes(payload)
-                in_stream = seg_xid is not None and not pd.isna(seg_xid)
-                top = int(seg_xid) if in_stream else None
-                kind = buf[:1]
-                ctrl = _CTRL.get(kind)
-                if ctrl is not None:
-                    emit(rows, lsn, None, None, ctrl)
-                    continue
-                xid = None
-                # Protocol v2 xid-prefixes EVERY in-segment frame, not
-                # just DML: logical-decoding Message ('M') and Type
-                # ('Y') frames inside S..E segments carry the Int32 xid
-                # too (this module's own encode_logical_message emits it
-                # for 'M', and decode_logical_messages(streamed=True)
-                # strips it). Without b"M" here the flags byte
-                # _parse_change reads at buf[1] is the xid's high byte,
-                # mis-tagging in-segment TRANSACTIONAL messages as
-                # message_nontxn for almost every xid; without b"Y" a
-                # streamed type row decodes with xid=None, so a
-                # subtransaction abort cannot match and discard it.
-                if in_stream and kind in (b"I", b"U", b"D", b"R", b"T",
-                                          b"M", b"Y"):
-                    try:
-                        (xid,) = struct.unpack_from(">i", buf, 1)
-                        buf = buf[:1] + buf[5:]
-                    except struct.error:
-                        emit(rows, lsn, None, None, "_corrupt")
-                        continue
-                tag, new, old, unch = _parse_change(buf, _image, known)
-                emit(rows, lsn, xid, top, tag, new, old, unch)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tagged.mapInPandas(decode, schema=out_schema)
+    # JVM-side framing around the shared kernel: strip the Int32 xid
+    # from in-segment frames before it, map S/E/c/A to control tags
+    # after it (the kernel itself dead-letters those kinds, as v1 does).
+    # Protocol v2 xid-prefixes EVERY in-segment frame, not just DML:
+    # logical-decoding Message ('M') and Type ('Y') frames inside S..E
+    # segments carry the Int32 xid too (this module's own
+    # encode_logical_message emits it for 'M', and
+    # decode_logical_messages(streamed=True) strips it). Without 'M' the
+    # flags byte _parse_change reads at buf[1] is the xid's high byte,
+    # mis-tagging in-segment TRANSACTIONAL messages as message_nontxn
+    # for almost every xid; without 'Y' a streamed type row decodes with
+    # xid=None, so a subtransaction abort cannot match and discard it.
+    kind = F.expr("substring(__payload, 1, 1)")
+    ctrl = (F.when(kind == F.lit(b"S"), "stream_start")
+            .when(kind == F.lit(b"E"), "stream_stop")
+            .when(kind == F.lit(b"c"), "stream_commit")
+            .when(kind == F.lit(b"A"), "stream_abort"))
+    strip = F.col("__seg_xid").isNotNull() & kind.isin(
+        *[F.lit(k) for k in (b"I", b"U", b"D", b"R", b"T", b"M", b"Y")])
+    short = strip & (F.length("__payload") < 5)  # no room for the xid
+    framed = tagged.select(
+        F.col("__lsn").cast("long").alias("lsn"),
+        F.when(strip & ~short, _be_int("__payload", 2, 4)).alias("xid"),
+        F.when(ctrl.isNull() & ~short, F.col("__seg_xid")).alias("top_xid"),
+        ctrl.alias("__ctrl"),
+        F.when(short, F.lit(b""))
+        .when(strip, F.expr("concat(substring(__payload, 1, 1),"
+                            " substring(__payload, 6))"))
+        .otherwise(F.col("__payload")).alias("__payload"),
+    )
+    wire = _decode_kernel(framed, relations, "__payload")
+    return _typed_envelope(
+        wire, relations, row_schema, track_unchanged,
+        "lsn", "xid", "top_xid",
+        F.coalesce(F.col("__ctrl"), F.col("tag")).alias("tag"))
 
 
 def apply_stream_transactions(decoded: DataFrame,
@@ -830,14 +843,15 @@ def apply_stream_transactions(decoded: DataFrame,
 # one typed schema (decode_pgoutput) forces one scan per table. The
 # scalable layering is the lakehouse bronze/silver split:
 #
-#   bronze  decode_pgoutput_generic — ONE Arrow pass turns every message
-#           into a schema-agnostic envelope (lsn, relid, tag, per-column
-#           text values + wire kinds). Python touches the bytes exactly
-#           once for the whole slot; persist/land this frame and every
-#           table routes from it.
-#   silver  route_table — pure JVM: element_at + try_cast build the typed
-#           image inside whole-stage codegen (checked casts: malformed
-#           text -> NULL, the same engine-wide rule), wire kind 'u'
+#   bronze  decode_pgoutput_generic — the decode kernel's wire frame
+#           itself, lsn rendered as the envelope's hex string: every
+#           message becomes a schema-agnostic envelope (lsn, relid, tag,
+#           per-column text values + wire kinds). Python touches the
+#           bytes exactly once for the whole slot; persist/land this
+#           frame and every table routes from it.
+#   silver  route_table — pure JVM: the same _typed_image rule every
+#           typed decoder uses (try_element_at + try_cast inside
+#           whole-stage codegen; malformed text -> NULL), wire kind 'u'
 #           surfaces as the unchanged-TOAST name list, 'n' stays SQL
 #           NULL. N tables = N filters over the SAME bronze scan, zero
 #           additional decode work.
@@ -853,70 +867,8 @@ def decode_pgoutput_generic(
     old_kinds) — values as wire text, kinds as 't'/'n'/'u' per column.
     Unknown relids keep their rows (relid is there, vals NULL) so a
     late-registered table is a re-route, not a re-capture."""
-    from pyspark.sql.types import ArrayType
-
-    if relations is None:
-        relations = discover_relations(messages, payload_col, lsn_col)
-    known = frozenset(relations)
-    arr = ArrayType(StringType())
-    out_schema = StructType([
-        StructField("lsn", StringType()),
-        StructField("relid", LongType()),
-        StructField("tag", StringType()),
-        StructField("vals", arr),
-        StructField("kinds", arr),
-        StructField("old_vals", arr),
-        StructField("old_kinds", arr),
-    ])
-
-    def split(vals):
-        if vals is None:
-            return None, None
-        out_v, out_k = [], []
-        for v in vals:
-            if isinstance(v, _UnchangedToast):
-                out_v.append(None)
-                out_k.append("u")
-            elif v is None:
-                out_v.append(None)
-                out_k.append("n")
-            else:
-                out_v.append(v)
-                out_k.append("t")
-        return out_v, out_k
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload in zip(pdf[lsn_col], pdf[payload_col]):
-                buf = bytes(payload)
-                lsn_s = f"0/{int(lsn):016X}"
-                relid = None
-                try:
-                    kind = buf[:1]
-                    if kind in (b"I", b"U", b"D"):
-                        (relid,) = struct.unpack_from(">i", buf, 1)
-                except (struct.error, IndexError):
-                    pass
-
-                def raw_image(rid, tuple_vals):
-                    # generic: keep the WIRE order, no schema projection
-                    return tuple_vals if rid in known else None
-
-                tag, new, old, _ = _parse_change(
-                    buf, lambda rid, tv: (raw_image(rid, tv), []), known)
-                nv, nk = split(new)
-                ov, ok = split(old)
-                rows.append((lsn_s, relid, tag, nv, nk, ov, ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["lsn", "relid", "tag", "vals", "kinds",
-                         "old_vals", "old_kinds"],
-            )
-
-    return messages.mapInPandas(decode, schema=out_schema)
+    wire, _ = _wire_frame(messages, relations, lsn_col, payload_col)
+    return wire.withColumn("lsn", _hex_lsn())
 
 
 def route_table(
@@ -927,46 +879,13 @@ def route_table(
     track_unchanged: bool = False,
 ) -> DataFrame:
     """Silver routing: the typed envelope for ONE table, built entirely
-    JVM-side from the bronze frame — element_at + try_cast inside
-    codegen, no Python. Output matches decode_pgoutput's frame (lsn,
-    tag, new, old [, unchanged]), so the standard pipeline and
-    toast_state run unchanged."""
-    g = generic.filter(F.col("relid") == relid)
-
-    def typed(vals_c, kinds_c):
-        fields = []
-        for f in row_schema.fields:
-            if f.name in col_names:
-                i = col_names.index(f.name) + 1  # element_at is 1-based
-                v = F.when(
-                    F.element_at(kinds_c, i) == "t",
-                    F.element_at(vals_c, i).try_cast(f.dataType),
-                )
-            else:  # additive evolution: schema column absent on the wire
-                v = F.lit(None).cast(f.dataType)
-            fields.append(v.alias(f.name))
-        return F.struct(*fields)
-
-    new = F.when(F.col("kinds").isNotNull(),
-                 typed(F.col("vals"), F.col("kinds")))
-    old = F.when(F.col("old_kinds").isNotNull(),
-                 typed(F.col("old_vals"), F.col("old_kinds")))
-    cols = [F.col("lsn"), F.col("tag"), new.alias("new"), old.alias("old")]
-    if track_unchanged:
-        names_lit = F.array(*[F.lit(c) for c in col_names])
-        cols.append(
-            F.when(
-                F.col("kinds").isNotNull(),
-                F.filter(
-                    F.zip_with(
-                        F.col("kinds"), names_lit,
-                        lambda k, n: F.when(k == "u", n),
-                    ),
-                    lambda x: x.isNotNull(),
-                ),
-            ).alias("unchanged")
-        )
-    return g.select(*cols)
+    JVM-side from the bronze frame by the shared _typed_image rule — no
+    Python. Output matches decode_pgoutput's frame (lsn, tag, new, old
+    [, unchanged]), so the standard pipeline and toast_state run
+    unchanged."""
+    return _typed_envelope(
+        generic.filter(F.col("relid") == relid), {relid: col_names},
+        row_schema, track_unchanged, "lsn", "tag")
 
 
 # --- protocol v3: two-phase commit (PREPARE TRANSACTION) -----------------------
@@ -1142,23 +1061,19 @@ def decode_pgoutput_2pc(
 
     if spans is None:
         spans = prepared_spans(messages, lsn_col, payload_col)
-    env = decode_pgoutput(
-        messages, row_schema, relations=relations,
-        lsn_col=lsn_col, payload_col=payload_col,
-        track_unchanged=track_unchanged,
-    ).withColumn(
-        "__ord", F.conv(F.expr("substring(lsn, 3, 16)"), 16, 10).cast("long")
-    )
+    wire, relations = _wire_frame(messages, relations, lsn_col, payload_col)
+    env = _typed_envelope(wire, relations, row_schema, track_unchanged,
+                          "lsn", "tag")
     tagged = binned_range_join(
-        env.drop("lsn"),
+        env,
         # bounded: O(#prepared transactions) control spans
         F.broadcast(spans),
-        "__ord", "p_start", "p_stop", bin_width, how="left_outer",
+        "lsn", "p_start", "p_stop", bin_width, how="left_outer",
     )
     stamp = F.when(F.col("tag").isin(*_PREPARED_STAMP_TAGS),
                    F.col("p_xid"))
     cols = [
-        F.col("__ord").alias("lsn"),
+        "lsn",
         stamp.alias("xid"),
         stamp.alias("top_xid"),
         "tag", "new", "old",
@@ -1201,7 +1116,7 @@ def decode_logical_messages(messages: DataFrame, lsn_col: str = "lsn",
     protocol v2 prefixes inside stream segments (pass the pre-filtered
     in-segment subset there; mixed captures route each subset through
     its own call)."""
-    from pyspark.sql.types import BinaryType, BooleanType
+    from pyspark.sql.types import BooleanType
 
     out_schema = StructType([
         StructField("lsn", LongType()),
@@ -1391,7 +1306,7 @@ def unwrap_xlogdata(frames: DataFrame,
 # decode library's JS objects; here it is explicit). Inference is part
 # of the same bounded O(#tables) metadata pass as name discovery.
 
-#: pg_type OID -> Spark type for the text-mode renderings _convert
+#: pg_type OID -> Spark type for the text-mode renderings _typed_image
 #: understands. NUMERIC maps to DecimalType(38,18) — exact, and wide
 #: enough for any fixture; unknown OIDs fall back to StringType (the
 #: wire value is text already, so nothing is lost — a consumer can

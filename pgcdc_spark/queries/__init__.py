@@ -69,75 +69,73 @@ _MODULES = (
 # carry the STALEST previously-green names (r8 verdict item 3) so the
 # cumulative driver evidence keeps refreshing.  As of round 9 every
 # oracle-backed name has been driver-sampled green at least once.
-# Round-13 list (VERDICT r12 item 4): the four new round-13 queries
-# first (never driver-sampled), then the THIRTY-FOUR r8-cohort names
-# that overflowed the r12 sample (r12 took the alphabetical head
-# agg_abc_pareto..cdc_pgoutput_state; the rest, last sampled round 8,
-# rotate to the front here), then the alphabetical head of the r9
-# cohort (49 names) to fill slot 50 — names past slot 50 overflow to
-# round 14 and rotate to the front there.  The two declared-approximate
-# no-oracle names (agg_approx_distinct, sketch_hll_distinct) stay
-# excluded: pytest bounds them instead, and a rows-only driver row
-# would spend a full-oracle slot.
+# Current list: the pgoutput consumers first — the decode kernel and its
+# typing rule changed under all of them.  cdc_replica_identity_state,
+# cdc_two_phase_state and cdc_xlog_infer_state lead (last sampled round
+# 9), then the seven pgoutput consumers sampled in rounds 13-14.  Next
+# the round-13 rewrites never driver-checked since (VERDICT r14 item 4),
+# then the round-9 cohort continued alphabetically from
+# cdc_origin_filter_state to fill slot 50; the names past it rotate to
+# the front next round.  The two declared-approximate no-oracle names
+# (agg_approx_distinct, sketch_hll_distinct) stay excluded: pytest
+# bounds them instead, and a rows-only driver row would spend a
+# full-oracle slot.
 # all_queries() yields these first, then every other query in
 # registration order.  Do NOT reorder mid-round.
 _PRIORITY = (
-    # round-13 additions (never driver-sampled) — first
-    "cdc_wal2json_v2_state",
-    "cdc_wal2json_v2_keyroute_state",
-    "docs_line_dedup",
-    "emb_triplet_mining",
-    # r12 sample overflow (last sampled round 8) — next per VERDICT
-    "assoc_rules_copurchase",
-    "cdc_lsn_gap_audit",
-    "cdc_multitable_route_state",
+    # pgoutput consumers: the shared decode kernel + typing rule
+    "cdc_replica_identity_state",
+    "cdc_two_phase_state",
+    "cdc_xlog_infer_state",
     "cdc_pgoutput_state",
     "cdc_pgoutput_stream_state",
-    "cdc_snapshot_cutover_state",
-    "cdc_time_travel_state",
     "cdc_toast_upsert_state",
-    "cdc_upsert_state",
-    "cdc_wal2json_state",
-    "docs_bm25_topk",
-    "docs_cms_heavy_hitters",
-    "docs_mixture_weights",
-    "docs_phrase_search",
-    "docs_train_val_test_split",
-    "events_ewma_smooth",
-    "events_markov_transitions",
-    "events_outliers_mad",
-    "events_outliers_zscore",
-    "events_session_window_native",
-    "feat_target_encoding",
-    "graph_bfs_recursive_cte",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "ivm_bm25_topk_state",
-    "ivm_distinct_view_state",
-    "ivm_histogram_view_state",
-    "ivm_term_df_state",
-    "ivm_topk_view_state",
-    "mm_binary_ingest",
-    "mm_quarantine_deadletter",
-    "profile_drift_psi",
-    "profile_join_key_skew",
-    "scalar_collation_groupby",
-    # last sampled round 9 (alphabetical head; the rest overflow to r14)
-    "agg_collect_set",
-    "agg_cube",
-    "agg_distinct_stats",
-    "agg_filtered_pivot",
-    "agg_global",
-    "agg_percentiles",
-    "agg_rollup",
-    "agg_stddev_stable",
-    "case_when_coalesce",
+    "cdc_multitable_route_state",
     "cdc_e2e_revenue_rollup",
-    "cdc_message_audit",
     "cdc_origin_filter_state",
-    # (cdc_replica_identity_state, cdc_two_phase_state,
-    # cdc_xlog_infer_state — next in the r9 cohort — overflow to r14:
-    # the four r13 additions take their slots plus one more)
+    "cdc_publication_filter_state",
+    # round-13 rewrites, not driver-sampled since
+    "dedup_minhash_lsh",
+    "dedup_verified_pairs",
+    "dedup_keep_best",
+    "training_mix_pipeline",
+    "docs_bpe_train_merges",
+    "emb_semantic_dedup",
+    "hybrid_rrf_retrieval",
+    "emb_ann_rerank_exact",
+    "emb_kmeans_lloyd",
+    # round-9 cohort, continued alphabetically (last sampled round 9)
+    "cdc_scd2_history",
+    "cdc_scd2_point_in_time",
+    "cdc_widening_state",
+    "corpus_prep_pipeline",
+    "dedup_by_key_latest",
+    "dedup_cc_clusters",
+    "dedup_containment",
+    "dedup_dup_ngram_spans",
+    "dedup_embedding_cosine",
+    "dedup_exact",
+    "dedup_fuzzy_levenshtein",
+    "dedup_incremental_new_docs",
+    "dedup_lsh_bucket_profile",
+    "dedup_minhash_estimate",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_simhash_hamming",
+    "distinct_rows",
+    "docs_bpe_encode_stats",
+    "docs_chunk_windows",
+    "docs_decontam_overlap",
+    "docs_filter_funnel",
+    "docs_fingerprint",
+    "docs_hash_sample",
+    "docs_lang_id",
+    "docs_lang_profile",
+    "docs_pack_sequences",
+    "docs_pii_scrub",
+    "docs_priority_sample_strata",
+    "docs_quality_score",
+    "docs_redact",
 )
 
 

@@ -499,6 +499,21 @@ _DEL_GOLDEN = (
 )
 
 
+# A 't' datum whose Int32 length is negative, or larger than the bytes
+# left in the message, is a cut or corrupt frame: dead-letter it rather
+# than accept a truncated value.
+_INS_NEG_LEN = (
+    b"I" + b"\x00\x00\x00\x01" + b"N"
+    + b"\x00\x01"                       # 1 column
+    + b"t" + b"\xff\xff\xff\xff" + b"7"  # length -1
+)
+_INS_OVERLONG = (
+    b"I" + b"\x00\x00\x00\x01" + b"N"
+    + b"\x00\x01"                       # 1 column
+    + b"t" + b"\x00\x00\x00\x05" + b"7"  # length 5, 1 byte left
+)
+
+
 def test_pgoutput_golden_bytes_encode_and_decode():
     from pgcdc_spark.cdc.pgoutput import (
         decode_relation_message,
@@ -523,7 +538,8 @@ def test_pgoutput_decode_golden_rows(spark):
                          StructField("v", DoubleType())])
     df = spark.createDataFrame(
         [(0, bytearray(_REL_GOLDEN)), (1, bytearray(_INS_GOLDEN)),
-         (2, bytearray(_DEL_GOLDEN)), (3, bytearray(b"\x00trunc"))],
+         (2, bytearray(_DEL_GOLDEN)), (3, bytearray(b"\x00trunc")),
+         (4, bytearray(_INS_NEG_LEN)), (5, bytearray(_INS_OVERLONG))],
         "lsn long, payload binary",
     )
     rows = {r["lsn"]: r for r in decode_pgoutput(df, schema).collect()}
@@ -534,6 +550,8 @@ def test_pgoutput_decode_golden_rows(spark):
     dl = rows["0/0000000000000002"]
     assert dl["tag"] == "delete" and dl["old"]["v"] == 1.5
     assert rows["0/0000000000000003"]["tag"] == "_corrupt"  # dead-letter
+    for lsn in ("0/0000000000000004", "0/0000000000000005"):
+        assert rows[lsn]["tag"] == "_corrupt" and rows[lsn]["new"] is None
 
 
 def test_pgoutput_unknown_relation_and_bad_value_checked(spark):
@@ -860,17 +878,22 @@ def test_toast_state_carry_forward(spark):
 
 def test_pgoutput_typed_decode_breadth(spark):
     """Postgres text renderings for the remaining common wire types —
-    bool 't'/'f', timestamp, numeric, bytea hex — decode to the schema's
-    types, and malformed text degrades to NULL (checked cast), never a
-    crashed batch."""
+    bool 't'/'f', timestamp, numeric, bytea hex, int4, float8 — decode
+    to the schema's types, and malformed or out-of-range text degrades
+    to NULL (checked cast), never a crashed batch. The typed decoder and
+    the bronze -> route_table path share one typing rule, so both must
+    read every row identically."""
     import datetime
+    import math
     from decimal import Decimal
 
     from pyspark.sql.types import (
-        BinaryType, BooleanType, DecimalType, LongType, StructField,
-        StructType, TimestampType)
+        BinaryType, BooleanType, DecimalType, DoubleType, IntegerType,
+        LongType, StructField, StructType, TimestampType)
 
-    from pgcdc_spark.cdc.pgoutput import decode_pgoutput, encode_insert
+    from pgcdc_spark.cdc.pgoutput import (
+        decode_pgoutput, decode_pgoutput_generic, encode_insert,
+        route_table)
 
     schema = StructType([
         StructField("id", LongType()),
@@ -878,26 +901,48 @@ def test_pgoutput_typed_decode_breadth(spark):
         StructField("at", TimestampType()),
         StructField("amt", DecimalType(12, 2)),
         StructField("blob", BinaryType()),
+        StructField("n", IntegerType()),
+        StructField("f", DoubleType()),
     ])
-    rels = {1: ["id", "ok", "at", "amt", "blob"]}
+    rels = {1: ["id", "ok", "at", "amt", "blob", "n", "f"]}
     good = encode_insert(
-        1, ["7", "t", "2024-03-01 10:23:54.500000", "12.34", "\\x0aff"])
-    bad = encode_insert(1, ["8", "maybe", "not-a-time", "NaN-ish", "\\xzz"])
+        1, ["7", "t", "2024-03-01 10:23:54.500000", "12.34", "\\x0aff",
+            "5", "1.5"])
+    bad = encode_insert(1, ["8", "maybe", "not-a-time", "NaN-ish", "\\xzz",
+                            "x", "y"])
+    edge = encode_insert(1, ["9", "f", None, "12.345", "\\xabc",
+                             "2147483648", "NaN"])
+    wide = encode_insert(1, ["10", None, None, "12345678901234", None,
+                             "-2147483648", "-Infinity"])
     df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(bad))],
+        [(1, bytearray(good)), (2, bytearray(bad)), (3, bytearray(edge)),
+         (4, bytearray(wide))],
         "lsn long, payload binary",
     )
-    rows = {r["lsn"]: r["new"]
-            for r in decode_pgoutput(df, schema, relations=rels).collect()}
-    g = rows["0/0000000000000001"]
-    assert g["id"] == 7 and g["ok"] is True
-    assert g["at"] == datetime.datetime(2024, 3, 1, 10, 23, 54, 500000)
-    assert g["amt"] == Decimal("12.34")
-    assert bytes(g["blob"]) == b"\x0a\xff"
-    b = rows["0/0000000000000002"]
-    assert b["id"] == 8
-    assert b["ok"] is None and b["at"] is None and b["amt"] is None
-    assert b["blob"] is None
+    typed = decode_pgoutput(df, schema, relations=rels)
+    routed = route_table(decode_pgoutput_generic(df, rels), 1, rels[1],
+                         schema)
+    for frame in (typed, routed):
+        rows = {r["lsn"]: r["new"] for r in frame.collect()}
+        g = rows["0/0000000000000001"]
+        assert g["id"] == 7 and g["ok"] is True
+        assert g["at"] == datetime.datetime(2024, 3, 1, 10, 23, 54, 500000)
+        assert g["amt"] == Decimal("12.34")
+        assert bytes(g["blob"]) == b"\x0a\xff"
+        assert g["n"] == 5 and g["f"] == 1.5
+        b = rows["0/0000000000000002"]
+        assert b["id"] == 8
+        assert b["ok"] is None and b["at"] is None and b["amt"] is None
+        assert b["blob"] is None and b["n"] is None and b["f"] is None
+        e = rows["0/0000000000000003"]
+        assert e["ok"] is False
+        assert e["amt"] == Decimal("12.35")   # rounded to the column scale
+        assert e["blob"] is None              # odd-length hex
+        assert e["n"] is None                 # past int4's range
+        assert math.isnan(e["f"])             # float8 NaN is a value
+        w = rows["0/0000000000000004"]
+        assert w["amt"] is None               # past DECIMAL(12,2)'s range
+        assert w["n"] == -2147483648 and w["f"] == -math.inf
 
 
 # --- pgoutput protocol v2: streamed in-progress transactions ------------------
